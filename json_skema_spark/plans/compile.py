@@ -14,14 +14,16 @@ Design:
   Pointer column for lineage. The table root uses direct ``F.col`` references
   so Catalyst column pruning still reaches the parquet scan.
 - Each keyword builder returns a ``Compiled``: a null-safe boolean ``passed``
-  Column plus a ``failures`` Column of type ``array<failure_struct>`` carrying
-  the reference's lineage fields (keyword / keywordLocation /
-  instanceLocation / dynamicPath / message — ValidationFailure.toJSON(),
-  ValidationFailure.kt:35-50). Failure wordings mirror the reference's
-  literal message templates (cited per keyword below).
+  Column plus a ``failures`` lowering that builds, on demand, the
+  ``array<failure_struct>`` Column carrying the reference's lineage fields
+  (keyword / keywordLocation / instanceLocation / dynamicPath / message —
+  ValidationFailure.toJSON(), ValidationFailure.kt:35-50). Failure wordings
+  mirror the reference's literal message templates (cited per keyword
+  below). A schema compiles once; every output (verdict, violations,
+  counts) is read from that one ``Compiled``.
 - Combinators are boolean algebra over child ``passed`` columns; failure
   aggregation matches ``ValidationFailure.flatten()`` (leaf failures,
-  ValidationFailure.kt:56-59).
+  ValidationFailure.kt:56-59) and composes the children's lowerings.
 - Everything stays JVM-side (whole-stage codegen); no Python UDFs anywhere in
   this module. Null semantics: a SQL NULL value is an *absent* property
   (JSON has no way to store "present but undefined" in a typed column), so
@@ -30,9 +32,9 @@ Design:
 
 Scale notes (100 TB target):
 
-- verdict-only consumers select just ``passed``; Catalyst prunes the unused
-  failure-struct expressions, so the hot path is pure codegen'd boolean
-  algebra over the scanned columns.
+- verdict-only consumers read just ``passed`` and never lower ``failures``,
+  so no failure-struct expression is built at all: the hot path is pure
+  codegen'd boolean algebra over the scanned columns.
 - predicates on a subset of columns never touch the others (column pruning:
   a plan that doesn't reference ``bytes`` won't read audio bytes at all).
 """
@@ -41,7 +43,6 @@ from __future__ import annotations
 
 import math as _math
 import re as _re
-import threading
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any, Callable
@@ -322,48 +323,53 @@ def empty_failures() -> Column:
     return F.array().cast(f"array<{FAILURE_DDL}>")
 
 
-# When set (via the light_messages() context), failure structs carry an
-# EMPTY message literal instead of the real formatted message expression.
-# Counting paths (ValidationPlan.summary) don't read messages, but the
-# per-violation format_string/cast work still executed at runtime — at
-# sf10 the summary ran 36x slower than the verdict scan over the same
-# rows almost entirely on message construction (round-5 measurement).
-# THREAD-LOCAL, not a module global: a multi-threaded driver submitting
-# parallel jobs may compile on several threads at once, and a process-wide
-# flag would bake empty messages into an unrelated thread's plan — or,
-# with interleaved context exits, stick True for the process lifetime
-# (review r05). Within one thread the save/restore is reentrant.
-_LIGHT = threading.local()
-
-
-def _light_active() -> bool:
-    return getattr(_LIGHT, "on", False)
-
-
-@contextmanager
-def light_messages():
-    prev = _light_active()
-    _LIGHT.on = True
-    try:
-        yield
-    finally:
-        _LIGHT.on = prev
+# a failures lowering: messages -> array<failure_struct> Column
+Lowering = Callable[[bool], Column]
 
 
 def _fail_struct(keyword: str, kw_loc: str, inst_loc: Column, dyn_path: str,
-                 message: Column) -> Column:
+                 message: Column, messages: bool) -> Column:
     return F.struct(
         F.lit(keyword).alias("keyword"),
         F.lit(kw_loc).alias("keyword_location"),
         inst_loc.alias("instance_location"),
         F.lit(dyn_path).alias("dynamic_path"),
-        (F.lit("") if _light_active() else message).alias("message"),
+        (message if messages else F.lit("")).alias("message"),
     )
+
+
+def _no_failures(messages: bool) -> Column:
+    return empty_failures()
+
+
+def _choose(cond: Column, then: Lowering,
+            other: Lowering = _no_failures) -> Lowering:
+    """Failures lowering: ``then``'s failures where ``cond`` holds,
+    ``other``'s elsewhere."""
+    return lambda messages: F.when(cond, then(messages)) \
+        .otherwise(other(messages))
+
+
+def _concat_failures(parts: list["Compiled"]) -> Lowering:
+    fails = [p.failures for p in parts]
+    if len(fails) == 1:
+        return fails[0]
+    return lambda messages: F.concat(*[f(messages) for f in fails])
 
 
 @dataclass
 class Compiled:
     """Result of lowering one schema node for one instance expression.
+
+    ``passed`` is built by the compile. ``failures`` is a lowering:
+    ``failures(messages)`` builds the ``array<failure_struct>`` Column
+    (never NULL, empty iff passed) only for consumers that read failure
+    rows, so verdict-only consumers never build a failure array. With
+    ``messages=False`` every message is an empty literal: counting
+    consumers never read ``message``, and evaluating each violating row's
+    format_string/cast chain made the summary 36x slower than the verdict
+    scan over the same rows at sf10. Keyword and location fields are
+    identical either way.
 
     ``legs`` is the summary fast-path metadata: a tuple of
     ``(cond_fail, keyword, keyword_location)`` triples, one per failure
@@ -378,26 +384,28 @@ class Compiled:
     """
 
     passed: Column   # boolean, never NULL
-    failures: Column  # array<failure_struct>, never NULL (empty iff passed)
+    failures: Lowering
     legs: tuple | None = None
 
     @staticmethod
     def ok() -> "Compiled":
-        return Compiled(F.lit(True), empty_failures(), legs=())
+        return Compiled(F.lit(True), _no_failures, legs=())
 
     @staticmethod
     def simple(cond_fail: Column, keyword: str, kw_loc: str, inst_loc: Column,
                dyn_path: str, message: Column) -> "Compiled":
         cond_fail = F.coalesce(cond_fail, F.lit(False))
-        dyn = dyn_path
         return Compiled(
             passed=~cond_fail,
-            failures=F.when(
-                cond_fail,
-                F.array(_fail_struct(keyword, kw_loc, inst_loc, dyn, message)),
-            ).otherwise(empty_failures()),
+            failures=_choose(cond_fail, lambda messages: F.array(_fail_struct(
+                keyword, kw_loc, inst_loc, dyn_path, message, messages))),
             legs=((cond_fail, keyword, kw_loc),),
         )
+
+    def gated(self, gate: Column) -> "Compiled":
+        """This result where ``gate`` holds, a pass elsewhere (no legs)."""
+        return Compiled(passed=F.when(gate, self.passed).otherwise(F.lit(True)),
+                        failures=_choose(gate, self.failures))
 
 
 def conj(parts: list[Compiled]) -> Compiled:
@@ -409,14 +417,12 @@ def conj(parts: list[Compiled]) -> Compiled:
     passed = parts[0].passed
     for p in parts[1:]:
         passed = passed & p.passed
-    fails = [p.failures for p in parts]
-    failures = fails[0] if len(fails) == 1 else F.concat(*fails)
     legs: tuple | None
     if all(p.legs is not None for p in parts):
         legs = tuple(leg for p in parts for leg in p.legs)
     else:
         legs = None
-    return Compiled(passed, failures, legs=legs)
+    return Compiled(passed, _concat_failures(parts), legs=legs)
 
 
 # --------------------------------------------------------------------------
@@ -928,10 +934,7 @@ class Compiler:
                                   sub_res, sub_parts.append)
             gate = F.coalesce(vt.is_object(inst.col), F.lit(False))
             if sub_parts:
-                sub = conj(sub_parts)
-                add(Compiled(
-                    passed=F.when(gate, sub.passed).otherwise(F.lit(True)),
-                    failures=F.when(gate, sub.failures).otherwise(empty_failures())))
+                add(conj(sub_parts).gated(gate))
             # coverage from the view flows to this node's unevaluated* and,
             # through merge_child in parents, to enclosing applicators
             res.merge_child(sub_res, gate)
@@ -949,10 +952,7 @@ class Compiler:
                                  sub_res, sub_parts.append)
             gate = F.coalesce(vt.is_array(inst.col), F.lit(False))
             if sub_parts:
-                sub = conj(sub_parts)
-                add(Compiled(
-                    passed=F.when(gate, sub.passed).otherwise(F.lit(True)),
-                    failures=F.when(gate, sub.failures).otherwise(empty_failures())))
+                add(conj(sub_parts).gated(gate))
             res.merge_child(sub_res, gate)
 
         # ---- combinators -------------------------------------------------
@@ -978,9 +978,7 @@ class Compiler:
                 part = self._kw_unevaluated_properties_dynamic(
                     sub, minst, kw_loc, dyn, scope, depth, res)
                 gate = F.coalesce(vt.is_object(inst.col), F.lit(False))
-                uneval_parts.append(Compiled(
-                    passed=F.when(gate, part.passed).otherwise(F.lit(True)),
-                    failures=F.when(gate, part.failures).otherwise(empty_failures())))
+                uneval_parts.append(part.gated(gate))
             # unevaluatedProperties evaluates every property not otherwise
             # covered -> together with prior keywords, EVERYTHING is now
             # evaluated; parents merging this node's annotations must see
@@ -998,19 +996,15 @@ class Compiler:
                 part = self._kw_unevaluated_items(
                     sub, ainst, kw_loc, dyn, scope, depth, res)
                 gate = F.coalesce(vt.is_array(inst.col), F.lit(False))
-                uneval_parts.append(Compiled(
-                    passed=F.when(gate, part.passed).otherwise(F.lit(True)),
-                    failures=F.when(gate, part.failures).otherwise(empty_failures())))
+                uneval_parts.append(part.gated(gate))
             res.rest_cov.append(F.lit(True))  # §11.2: all items now evaluated
         if uneval_parts:
             uneval = conj(uneval_parts)
             # only evaluated when no prior failure (shouldVisitUnevaluatedSchemas,
             # Validator.kt:419)
-            combined = Compiled(
+            res.compiled = Compiled(
                 passed=base.passed & uneval.passed,
-                failures=F.when(base.passed, uneval.failures).otherwise(base.failures),
-            )
-            res.compiled = combined
+                failures=_choose(base.passed, uneval.failures, base.failures))
         else:
             res.compiled = base
         return res
@@ -1569,8 +1563,8 @@ class Compiler:
             # size(filter(missing-names)) > 0: present() is never-null on
             # every instance kind, and Compiled.simple coalesces anyway.
             # `missing` survives only inside the failure MESSAGE, which is
-            # evaluated for failing rows alone (and replaced by a literal
-            # under light_messages).
+            # evaluated for failing rows alone (and replaced by an empty
+            # literal when failures lower without messages).
             cond = F.lit(False)
             for n in req:
                 cond = cond | ~inst.present(n)
@@ -1725,11 +1719,7 @@ class Compiler:
                 child = self._compile(sub, inst, sloc,
                                       dyn + "/dependentSchemas/" + key, scope, depth + 1)
                 present = inst.present(key)
-                gated = Compiled(
-                    passed=F.when(present, child.compiled.passed).otherwise(F.lit(True)),
-                    failures=F.when(present, child.compiled.failures)
-                    .otherwise(empty_failures()))
-                add(gated)
+                add(child.compiled.gated(present))
                 res.merge_child(child, present & child.compiled.passed)
 
     # -- array keywords ----------------------------------------------------
@@ -1813,31 +1803,32 @@ class Compiler:
                           F.concat(inst.loc, F.lit(f"/{i}")), strict=inst.strict)
                 child = self._compile(sub, el, ploc, dyn + f"/prefixItems/{i}",
                                       scope, depth + 1).compiled
-                gate = ~inst.is_absent() & (size > i)
-                add(Compiled(
-                    passed=F.when(gate, child.passed).otherwise(F.lit(True)),
-                    failures=F.when(gate, child.failures).otherwise(empty_failures())))
+                add(child.gated(~inst.is_absent() & (size > i)))
             res.prefix_cov = max(res.prefix_cov, prefix_n)
 
         # items (Validator.kt:711-728): every element from prefix_n on
         if "items" in node:
             iloc = f"{kw_loc}/items"
-            elem_fn = self._element_fn(node["items"], elem_t, inst.loc, iloc,
+            item_fn = self._element_fn(node["items"], elem_t, inst.loc, iloc,
                                        dyn + "/items", scope, depth, strict=inst.strict)
-            per_elem = F.transform(
-                arr, lambda x, i: F.when(i >= prefix_n, elem_fn(x, i).failures)
-                .otherwise(empty_failures()))
-            failures = F.flatten(per_elem)
+
+            def item_failures(messages: bool) -> Column:
+                # re-enters _compile through item_fn, with the scope and
+                # depth the passed lambda below compiled under
+                per_elem = F.transform(
+                    arr, lambda x, i: F.when(
+                        i >= prefix_n, item_fn(x, i).failures(messages))
+                    .otherwise(empty_failures()))
+                return F.coalesce(F.flatten(per_elem), empty_failures())
             # passed: all post-prefix elements pass
             ok = F.forall(
                 F.transform(arr, lambda x, i: F.when(i < prefix_n, F.lit(True))
-                            .otherwise(elem_fn(x, i).passed)),
+                            .otherwise(item_fn(x, i).passed)),
                 lambda b: b)
             add(Compiled(
                 passed=F.when(inst.is_absent(), F.lit(True))
                 .otherwise(F.coalesce(ok, F.lit(True))),
-                failures=F.when(inst.is_absent(), empty_failures())
-                .otherwise(F.coalesce(failures, empty_failures()))))
+                failures=_choose(inst.is_absent(), _no_failures, item_failures)))
             res.rest_cov.append(F.lit(True))
 
         # contains + minContains/maxContains (Validator.kt:751-781)
@@ -1921,11 +1912,8 @@ class Compiler:
                 any_ok = any_ok | s.compiled.passed
             # on failure, flatten() yields the branch leaf failures
             # (AnyOf.kt message + ValidationFailure.flatten, :56-59)
-            fails = F.concat(*[s.compiled.failures for s in subs]) \
-                if len(subs) > 1 else subs[0].compiled.failures
-            add(Compiled(
-                passed=any_ok,
-                failures=F.when(~any_ok, fails).otherwise(empty_failures())))
+            add(Compiled(passed=any_ok, failures=_choose(
+                ~any_ok, _concat_failures([s.compiled for s in subs]))))
             for s in subs:
                 res.merge_child(s, s.compiled.passed)
 
@@ -1939,19 +1927,19 @@ class Compiler:
             for s in subs:
                 c = s.compiled.passed.cast("int")
                 matched = c if matched is None else matched + c
-            one_struct = _fail_struct(
-                "oneOf", f"{kw_loc}/oneOf", inst.loc, dyn + "/oneOf",
-                F.format_string(
-                    f"expected 1 subschema to match out of {n}, %s matched", matched))
-            child_fails = F.concat(*[s.compiled.failures for s in subs]) \
-                if n > 1 else subs[0].compiled.failures
+            one_msg = F.format_string(
+                f"expected 1 subschema to match out of {n}, %s matched", matched)
+            child_fails = _concat_failures([s.compiled for s in subs])
+            absent = inst.is_absent()
             # absent value: oneOf never applies (all branches vacuously pass,
             # which would read as "N matched" without this guard)
             add(Compiled(
-                passed=inst.is_absent() | (matched == 1),
-                failures=F.when(inst.is_absent(), empty_failures())
-                .when(matched == 0, child_fails)
-                .when(matched > 1, F.array(one_struct))
+                passed=absent | (matched == 1),
+                failures=lambda messages: F.when(absent, empty_failures())
+                .when(matched == 0, child_fails(messages))
+                .when(matched > 1, F.array(_fail_struct(
+                    "oneOf", f"{kw_loc}/oneOf", inst.loc, dyn + "/oneOf",
+                    one_msg, messages)))
                 .otherwise(empty_failures())))
             for s in subs:
                 res.merge_child(s, s.compiled.passed & (matched == 1))
@@ -1978,9 +1966,8 @@ class Compiler:
                                          dyn + "/else", scope, depth + 1)
             t = then_res.compiled if then_res else Compiled.ok()
             e = else_res.compiled if else_res else Compiled.ok()
-            add(Compiled(
-                passed=F.when(ip, t.passed).otherwise(e.passed),
-                failures=F.when(ip, t.failures).otherwise(e.failures)))
+            add(Compiled(passed=F.when(ip, t.passed).otherwise(e.passed),
+                         failures=_choose(ip, t.failures, e.failures)))
             res.merge_child(if_res, ip)
             if then_res:
                 res.merge_child(then_res, ip & t.passed)
@@ -2102,12 +2089,9 @@ class Compiler:
 def compile_schema(schema_doc: Any, struct_type: T.StructType, **kwargs):
     """Compile ``schema_doc`` against a table schema; returns a ValidationPlan.
 
-    Forces the full-message compile so schema mistakes raise HERE —
+    The plan compiles at construction, so schema mistakes raise HERE —
     before callers (runner.validate_table) create manifests or output
-    dirs — while ValidationPlan itself stays lazy for light-only
-    streaming consumers (review r05c)."""
+    dirs."""
     from json_skema_spark.plans.verdict import ValidationPlan
 
-    plan = ValidationPlan(Compiler(schema_doc, **kwargs), struct_type)
-    plan._compiled  # noqa: B018 — force compile errors to surface now
-    return plan
+    return ValidationPlan(Compiler(schema_doc, **kwargs), struct_type)

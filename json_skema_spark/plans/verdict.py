@@ -9,60 +9,55 @@ table is the distributed equivalent, plus north-rule lineage:
 ``partition_id`` (per-partition provenance) and the row key.
 
 Scale notes:
-- ``apply(..., mode="verdict")`` only builds the boolean column; Catalyst
-  prunes every failure-struct expression, so the verdict path is pure
-  whole-stage-codegen boolean algebra.
+- ``apply(..., mode="verdict")`` only reads the boolean column and never
+  lowers failures, so the verdict path is pure whole-stage-codegen boolean
+  algebra.
 - ``violations`` filters to failing rows *before* exploding, so shuffle-free
   and proportional to the violation count, not the table size.
 """
 
 from __future__ import annotations
 
+from functools import cached_property
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from json_skema_spark.plans.compile import Compiled, Compiler
+from json_skema_spark.plans.compile import Compiler
 
 
 class ValidationPlan:
-    """A schema compiled against a fixed table StructType."""
+    """A schema compiled once against a fixed table StructType.
+
+    The compile runs at construction, so schema mistakes raise before
+    callers (runner.validate_table) create manifests or output dirs.
+    Every output reads the one ``compiled`` result: verdict-only
+    consumers read ``passed`` and never build a failure array; failure
+    rows lower ``compiled.failures`` with messages (``failures``, cached);
+    counting lowers it without messages (``summary``'s explode fallback,
+    ``streaming.validate_stream.violation_rate``)."""
 
     def __init__(self, compiler: Compiler, struct_type: T.StructType):
         self.compiler = compiler
         self.struct_type = struct_type
-        self._full_compiled: Compiled | None = None
-        self._light_compiled: Compiled | None = None
-
-    @property
-    def _compiled(self) -> Compiled:
-        """Full-message compile, LAZY: light-only consumers
-        (``violation_rate`` reads only ``_light().passed/failures``) no
-        longer pay a second full-message compile_root they never use
-        (review r05c). Batch entry points that want schema mistakes to
-        raise at construction — before manifests/output dirs exist —
-        force it via ``compile.compile_schema``."""
-        if self._full_compiled is None:
-            self._full_compiled = self.compiler.compile_root(
-                self.struct_type)
-        return self._full_compiled
+        self.compiled = compiler.compile_root(struct_type)
 
     @property
     def passed(self) -> Column:
-        return self._compiled.passed
+        return self.compiled.passed
 
-    @property
+    @cached_property
     def failures(self) -> Column:
-        return self._compiled.failures
+        return self.compiled.failures(True)
 
     def apply(self, df: DataFrame, mode: str = "full") -> DataFrame:
         """Add ``passed`` (and in full mode ``failures``) columns."""
         if mode == "verdict":
-            return df.withColumn("passed", self._compiled.passed)
-        return df.withColumn("passed", self._compiled.passed) \
-                 .withColumn("failures", self._compiled.failures)
+            return df.withColumn("passed", self.passed)
+        return df.withColumn("passed", self.passed) \
+                 .withColumn("failures", self.failures)
 
     def violations(self, df: DataFrame, row_key: str | Column, *,
                    file_lineage: bool = False) -> DataFrame:
@@ -83,10 +78,10 @@ class ValidationPlan:
         # 7-task->32-task message-construction win it bought at sf1.0
         # (count 0.95 s -> 1.37 s with the repartition), and at scale the
         # scan yields ample splits anyway.
-        failing = df.filter(~self._compiled.passed)
+        failing = df.filter(~self.passed)
         cols = [
             key.cast("string").alias("row_key"),
-            self._compiled.failures.alias("failures"),
+            self.failures.alias("failures"),
             F.spark_partition_id().alias("partition_id"),
         ]
         out_extra = []
@@ -123,8 +118,8 @@ class ValidationPlan:
         bounded by the number of schema keywords, so the final shuffle is tiny
         regardless of input scale.
 
-        Uses a LIGHT-MESSAGE recompile of the same schema: counting never
-        reads ``message``, but the full plan still evaluated each violating
+        The explode path lowers failures WITHOUT messages: counting never
+        reads ``message``, but full messages still evaluated each violating
         row's format_string/cast chain before the explode — at sf10 that made
         the summary 36x slower than the verdict scan over identical rows
         (round-5 measurement: 38.6 s -> see BENCH/BASELINE.md). Keyword /
@@ -144,8 +139,7 @@ class ValidationPlan:
         combinator/per-element failure legs (legs=None) keep the explode
         path.
         """
-        light = self._light()
-        legs = light.legs
+        legs = self.compiled.legs
         if legs:
             # legs sharing a (keyword, keyword_location) are merged at BUILD
             # time (their per-row contributions add), so no post-explode
@@ -172,8 +166,8 @@ class ValidationPlan:
             # array (same shape as violations()): passing rows never pay
             # for array construction, and the boolean filter stays inside
             # whole-stage codegen at the scan
-            df.filter(~light.passed)
-            .select(light.failures.alias("failures"))
+            df.filter(~self.passed)
+            .select(self.compiled.failures(False).alias("failures"))
             .select(F.explode("failures").alias("f"))
             .groupBy(
                 F.col("f.keyword").alias("keyword"),
@@ -182,21 +176,10 @@ class ValidationPlan:
             .agg(F.count("*").alias("n_violations"))
         )
 
-    def _light(self) -> Compiled:
-        """The same compiled plan with empty failure messages (lazy)."""
-        if self._light_compiled is None:
-            from json_skema_spark.plans.compile import light_messages
-            with light_messages():
-                self._light_compiled = self.compiler.compile_root(
-                    self.struct_type)
-        return self._light_compiled
-
     def verdict_counts(self, df: DataFrame) -> DataFrame:
-        # light compile: only the boolean verdict is read — forcing the
-        # full-message tree here defeated the lazy-_compiled design for
-        # verdict-only consumers (review r05c)
+        # reads only the boolean verdict: no failure array is lowered
         return (
-            df.select(self._light().passed.alias("passed"))
+            df.select(self.passed.alias("passed"))
             .groupBy("passed").agg(F.count("*").alias("n_rows"))
         )
 

@@ -24,7 +24,7 @@ def _run_case(spark, case):
     comp = Compiler(case.schema, registry=case.registry, **case.compiler_kwargs)
     c = comp.compile_value(F.col("v"), dtype)
     out = df.select("i", c.passed.alias("passed"),
-                    F.transform(c.failures, lambda f: f.getField("keyword"))
+                    F.transform(c.failures(True), lambda f: f.getField("keyword"))
                     .alias("kws")).collect()
     return {r.i: (r.passed, set(r.kws)) for r in out}
 

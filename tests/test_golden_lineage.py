@@ -14,7 +14,7 @@ def _violations(spark, schema, dtype_ddl, value, **kw):
                                T.StructType([T.StructField("v", dtype)]))
     comp = Compiler(schema, **kw)
     c = comp.compile_value(F.col("v"), dtype)
-    rows = df.select(F.explode(c.failures).alias("f")).select("f.*").collect()
+    rows = df.select(F.explode(c.failures(True)).alias("f")).select("f.*").collect()
     return [r.asDict() for r in rows]
 
 

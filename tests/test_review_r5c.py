@@ -127,11 +127,10 @@ def test_deprecated_usage_zero_row_table_counts_zero(spark):
     assert r["frac_present"] == 0.0
 
 
-def test_violation_rate_compiles_once(spark, monkeypatch):
-    """violation_rate reads only the light plan; the full-message compile
-    must not run at all (review r05c finding 7)."""
+@pytest.fixture
+def compile_root_calls(monkeypatch):
+    """One entry per Compiler.compile_root call."""
     from json_skema_spark.plans import compile as compile_mod
-    from json_skema_spark.streaming.validate_stream import violation_rate
 
     calls = []
     orig = compile_mod.Compiler.compile_root
@@ -141,10 +140,17 @@ def test_violation_rate_compiles_once(spark, monkeypatch):
         return orig(self, struct_type)
 
     monkeypatch.setattr(compile_mod.Compiler, "compile_root", counting)
+    return calls
+
+
+def test_violation_rate_compiles_once(spark, compile_root_calls):
+    """violation_rate compiles its schema once."""
+    from json_skema_spark.streaming.validate_stream import violation_rate
+
     df = spark.createDataFrame([(datetime(2026, 1, 1), 1.0)],
                                "ts timestamp, v double")
     rate = violation_rate(df, {"properties": {"v": {"minimum": 2}}}, "ts")
-    assert len(calls) == 1  # light only — full plan never built
+    assert len(compile_root_calls) == 1
     assert "n_violations" in rate.columns
 
 
@@ -158,6 +164,35 @@ def test_compile_schema_still_fails_at_construction(spark):
     st = T.StructType([T.StructField("a", T.StringType())])
     with pytest.raises(CompileError):
         compile_schema({"properties": {"a": 5}}, st)
+
+
+def test_items_error_inside_oneof_raises_at_construction(spark):
+    """`items` failures are lowered after the compile and re-enter it for
+    the element schema. A mistake there must still surface once, from
+    compile_schema, and a valid schema of the same shape must lower its
+    failures without recording any compile error."""
+    from pyspark.sql import types as T
+
+    from json_skema_spark.plans.compile import (AggregateCompileError,
+                                                compile_schema)
+    st = T.StructType([T.StructField("a", T.ArrayType(T.IntegerType()))])
+
+    def doc(items):
+        return {"properties": {"a": {"oneOf": [{"items": items},
+                                               {"type": "string"}]}}}
+
+    with pytest.raises(AggregateCompileError) as exc:
+        compile_schema(doc({"multipleOf": 0}), st)
+    assert [e.location for e in exc.value.errors] == [
+        "#/properties/a/oneOf/0/items/multipleOf"]
+
+    df = spark.createDataFrame([([1, -1],)], st)
+    plan = compile_schema(doc({"minimum": 0}), st)
+    rows = plan.violations(df, F.lit("k")).collect()
+    assert [(r.keyword, r.instance_location) for r in rows] == [
+        ("minimum", "#/a/1"), ("type", "#/a")]
+    assert plan.summary(df).count() == 2
+    assert plan.compiler.errors == []
 
 
 def test_chunk_assignments_null_group_not_dropped(spark):
@@ -1044,23 +1079,63 @@ def test_uniqueness_violations_carry_partition_id_column(spark):
     assert out.collect()[0]["partition_id"] is None
 
 
-def test_verdict_counts_uses_light_compile(spark, monkeypatch):
-    from json_skema_spark.plans import compile as compile_mod
+@pytest.mark.parametrize("sub", [
+    {"minimum": 0},
+    {"anyOf": [{"minimum": 0}, {"maximum": -5}]},
+], ids=["summary_legs", "summary_explode"])
+def test_plan_compiles_schema_once(spark, compile_root_calls, sub):
+    """Every output of one ValidationPlan reads its one compile."""
     from json_skema_spark.plans.compile import Compiler
     from json_skema_spark.plans.verdict import ValidationPlan
-    calls = []
-    orig = compile_mod.Compiler.compile_root
+    df = spark.createDataFrame([(1,), (-1,)], "v int")
+    plan = ValidationPlan(Compiler({"properties": {"v": sub}}), df.schema)
+    verdicts = plan.apply(df, mode="verdict").collect()
+    assert [r.passed for r in verdicts] == [True, False]
+    n = plan.violations(df, "v").count()
+    assert n >= 1
+    assert sum(r.n_violations for r in plan.summary(df).collect()) == n
+    counts = {r.passed: r.n_rows for r in plan.verdict_counts(df).collect()}
+    assert counts == {True: 1, False: 1}
+    assert len(compile_root_calls) == 1
+    # the combinator's failures are not summarizable per leg
+    assert (plan.compiled.legs is None) == ("anyOf" in sub)
 
-    def counting(self, st):
-        calls.append(1)
-        return orig(self, st)
 
-    monkeypatch.setattr(compile_mod.Compiler, "compile_root", counting)
-    df = spark.createDataFrame([(1,)], "v int")
-    plan = ValidationPlan(Compiler({"properties": {"v": {"minimum": 0}}}),
-                          df.schema)
-    plan.verdict_counts(df).collect()
-    assert len(calls) == 1  # light only — full-message tree never built
+def test_verdict_only_paths_build_no_failure_structs(spark, monkeypatch):
+    """Verdict-only consumers never lower failures: neither the suite
+    runner nor apply(mode="verdict") builds a failure struct."""
+    from json_skema_spark.plans import compile as compile_mod
+    from json_skema_spark.plans.compile import compile_schema
+    from json_skema_spark.sources.suite import SuiteGroup, run_suite_file
+
+    built = []
+    orig = compile_mod._fail_struct
+
+    def counting(*args):
+        built.append(1)
+        return orig(*args)
+
+    monkeypatch.setattr(compile_mod, "_fail_struct", counting)
+    doc = {"type": "object", "required": ["a"],
+           "properties": {"a": {"type": "array", "items": {"minimum": 0}},
+                          "b": {"oneOf": [{"minimum": 5}, {"maximum": 0}]}}}
+    group = SuiteGroup(file="probe.json", is_format=False,
+                       description="probe", schema=doc, tests=[
+                           {"description": "ok", "valid": True,
+                            "data": {"a": [1], "b": 9}},
+                           {"description": "bad", "valid": False,
+                            "data": {"a": [-1], "b": 3}}])
+    results = run_suite_file(spark, [group])
+    assert [(r.test, r.got) for r in results] == [("ok", True),
+                                                  ("bad", False)]
+    df = spark.createDataFrame([([1], 9), ([-1], 3)], "a array<int>, b int")
+    plan = compile_schema(doc, df.schema)
+    verdicts = plan.apply(df, mode="verdict").collect()
+    assert [r.passed for r in verdicts] == [True, False]
+    assert built == []
+    # the violations path is the one that lowers them
+    assert plan.violations(df, "b").count() == 3
+    assert built
 
 
 def test_deprecated_usage_dotted_column_still_counts(spark):

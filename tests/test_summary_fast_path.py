@@ -45,9 +45,8 @@ def table(spark):
 
 
 def _explode_counts(plan, df):
-    light = plan._light()
-    return (df.filter(~light.passed)
-            .select(light.failures.alias("failures"))
+    return (df.filter(~plan.passed)
+            .select(plan.compiled.failures(False).alias("failures"))
             .select(F.explode("failures").alias("f"))
             .groupBy(F.col("f.keyword").alias("keyword"),
                      F.col("f.keyword_location").alias("keyword_location"))
@@ -56,7 +55,7 @@ def _explode_counts(plan, df):
 
 def test_simple_schema_has_legs(table):
     plan = compile_schema(SIMPLE, table.schema)
-    assert plan._light().legs, "simple scalar schema must be summarizable"
+    assert plan.compiled.legs, "simple scalar schema must be summarizable"
 
 
 def test_fast_path_matches_explode(table):
@@ -70,7 +69,7 @@ def test_fast_path_matches_explode(table):
 
 def test_combinator_schema_falls_back(table):
     plan = compile_schema(COMBINATOR, table.schema)
-    assert plan._light().legs is None, \
+    assert plan.compiled.legs is None, \
         "anyOf wraps child failures — legs must poison to None"
     # and the fallback still produces the right counts
     out = {(r.keyword, r.keyword_location): r.n_violations

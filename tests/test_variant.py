@@ -14,7 +14,7 @@ def _run(spark, schema, json_values, **kw):
     comp = Compiler(schema, **kw)
     c = comp.compile_value(F.parse_json(F.col("j")), T.VariantType())
     out = df.select("i", c.passed.alias("p"),
-                    F.transform(c.failures, lambda f: f.getField("keyword"))
+                    F.transform(c.failures(True), lambda f: f.getField("keyword"))
                     .alias("kws")).collect()
     return {r.i: (r.p, list(r.kws)) for r in out}
 
