@@ -5,14 +5,11 @@ type (Format.kt:23-160); this module is the audio-payload analogue (north
 rule: decoded-PCM allclose with SNR >= 30 dB vs the reference signal, plus
 decode-ability itself as a per-row constraint).
 
-Execution model (input_hint mandate: vectorized pandas/Arrow UDFs, no
-per-row Python):
-
-- ``mapInPandas`` with an iterator of Arrow record batches; numpy does the
-  byte-level work per batch. Python cost is per *batch*, not per row; the
-  per-row loop inside is pure numpy/bytes slicing.
-- Only the needed columns enter the UDF (schema-projected before the map),
-  so the 100 TB scan doesn't ship unused columns through Arrow.
+Execution model: every stage here runs through ``payload.map_payload``,
+one ``mapInArrow`` pass per Arrow record batch with only the stage's columns
+projected into it, so the 100 TB scan doesn't ship unused columns through
+Arrow. The WAV payload arrives as a zero-copy ``memoryview`` of the Arrow
+buffer; the per-row work is numpy.
 
 Codec support: WAV/RIFF PCM16 ("pcm_s16le") decoded for real. "flac" /
 "opus" decoders are STUBS (no codec libs in this container): they
@@ -23,14 +20,15 @@ the Spark-side plumbing (schema, batching, dispatch) is real and tested.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from json_skema_spark.functions.payload import Decoders, map_payload
+
+CLIP_PAYLOAD = ("clip_id", "codec", "bytes")
 DECODE_SCHEMA = ("clip_id string, decode_ok boolean, error string, "
                  "sr_hz_decoded int, n_samples long")
 SNR_SCHEMA = ("clip_id string, invariant_ok boolean, snr_db double, "
@@ -149,11 +147,8 @@ def decode_wav_pcm16(buf: bytes) -> tuple[np.ndarray | None, int, str]:
 # Decoder registry: codec name -> callable(bytes) -> (signal, sr_hz, error).
 # Pluggable (VERDICT r02 #7): a real deployment registers pyflac/pyogg
 # decoders with the same signature; tests register fakes to pin the
-# integration contract. Each UDF builder snapshots the registry BY VALUE
-# into its closure (cloudpickle ships the snapshot to executors) — a
-# module-level lookup would pickle by reference and silently lose runtime
-# registrations when the worker re-imports this module. Register decoders
-# before building the DataFrame plan.
+# integration contract. Stages dispatch through a by-value snapshot of it
+# (``_decoder_snapshot``, see ``payload.Decoders``).
 Decoder = Any  # Callable[[bytes], tuple[np.ndarray | None, int, str]]
 
 _DECODERS: dict[str, Decoder] = {
@@ -166,9 +161,11 @@ _KNOWN_CODECS = {"pcm_s16le", "flac", "opus"}
 
 
 def register_decoder(codec: str, fn: Decoder) -> None:
-    """Register/replace the decoder for ``codec``. ``fn(buf)`` must return
+    """Register/replace the decoder for ``codec``. ``fn(buf)`` receives the
+    payload as ``bytes`` (``None`` for a null payload) and must return
     ``(float signal in [-1,1] | None, sr_hz, error_string)``; exceptions it
-    leaks are contained per row as ``decode_error:<type>`` verdicts."""
+    leaks are contained per row as ``decode_error:<type>`` verdicts.
+    Register before building the plan: stages snapshot the registry."""
     _DECODERS[codec] = fn
     _KNOWN_CODECS.add(codec)
 
@@ -228,57 +225,23 @@ def register_optional_decoders() -> list[str]:
     return registered
 
 
-def _decoder_snapshot() -> tuple[dict[str, Decoder], frozenset]:
-    """Value-copy of (decoders, known codecs) for capture into a UDF
-    closure. The KNOWN set must ride the snapshot too: reading the
-    module-global on an executor (whose re-imported module only has the
-    builtins) would report 'unknown_codec' where the driver says
-    'codec_not_supported' — inconsistent verdicts for the same row
-    (review r04)."""
-    return dict(_DECODERS), frozenset(_KNOWN_CODECS)
-
-
-def _decode_with(decoders, codec: Any,
-                 buf: Any) -> tuple[np.ndarray | None, int, str]:
-    if isinstance(decoders, tuple):
-        decoders, known = decoders
-    else:  # bare-dict callers (driver-side dispatch)
-        known = _KNOWN_CODECS
-    fn = decoders.get(codec)
-    if fn is not None:
-        try:
-            return fn(buf)
-        except Exception as exc:  # decoder bug must not kill the task
-            return None, 0, f"decode_error:{type(exc).__name__}"
-    if codec in known:
-        return None, 0, f"codec_not_supported:{codec}"
-    return None, 0, f"unknown_codec:{codec}"
-
-
-def _decode_dispatch(codec: Any, buf: Any) -> tuple[np.ndarray | None, int, str]:
-    """Driver-side convenience dispatch against the live registry."""
-    return _decode_with(_DECODERS, codec, buf)
+def _decoder_snapshot() -> Decoders:
+    """The audio registry's dispatch, ``decode(codec, payload) -> (signal,
+    sr_hz, error)``; the built-in WAV decoder reads the payload view."""
+    return Decoders(_DECODERS, _KNOWN_CODECS, (None, 0),
+                    native=(decode_wav_pcm16,))
 
 
 def decode_check(df: DataFrame) -> DataFrame:
     """Per-row decode-ability check -> (clip_id, decode_ok, error,
     sr_hz_decoded, n_samples)."""
+    decode = _decoder_snapshot()
 
-    decoders = _decoder_snapshot()
+    def row(cid, codec, buf):
+        sig, sr, err = decode(codec, buf)
+        return [(cid, sig is not None, err, sr, 0 if sig is None else len(sig))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"clip_id": pdf["clip_id"], "decode_ok": [], "error": [],
-                   "sr_hz_decoded": [], "n_samples": []}
-            for codec, buf in zip(pdf["codec"], pdf["bytes"]):
-                sig, sr, err = _decode_with(decoders, codec, buf)
-                out["decode_ok"].append(sig is not None)
-                out["error"].append(err)
-                out["sr_hz_decoded"].append(sr)
-                out["n_samples"].append(0 if sig is None else len(sig))
-            yield pd.DataFrame(out)
-
-    return df.select("clip_id", "codec", "bytes").mapInPandas(run, DECODE_SCHEMA)
+    return map_payload(df, CLIP_PAYLOAD, DECODE_SCHEMA, lambda: row)
 
 
 def snr_db(reference: np.ndarray, decoded: np.ndarray) -> float:
@@ -390,8 +353,8 @@ def pcm_invariant_check(df: DataFrame, ref_transcripts: DataFrame | None = None,
     signal", and sharing the name over-counted decode failures in any
     consumer comparing the two outputs (review r05c).
     """
-    cols = ["clip_id", "codec", "bytes", "sr_hz", "dur_ms", "transcript"]
-    base = df.select(*cols)
+    cols = [*CLIP_PAYLOAD, "sr_hz", "dur_ms", "transcript", "_ref_transcript"]
+    base = df.select(*cols[:-1])
     if ref_transcripts is not None:
         r = ref_transcripts.select(
             F.col("clip_id"), F.col("transcript").alias("_ref_transcript"))
@@ -399,145 +362,87 @@ def pcm_invariant_check(df: DataFrame, ref_transcripts: DataFrame | None = None,
     else:
         base = base.withColumn("_ref_transcript", F.col("transcript"))
 
-    decoders = _decoder_snapshot()
+    decode = _decoder_snapshot()
 
-    def run(batches):
-        # mapInArrow (r06): the pandas path materialized every WAV payload
-        # as a Python bytes object (one copy per clip) and the decode
-        # expanded it 4x into a full float64 signal before the SNR loop.
-        # Here each clip's bytes are a zero-copy memoryview slice of the
-        # Arrow data buffer, the WAV parse yields an int16 VIEW, and the
-        # int16 -> float64 conversion happens chunk-wise inside
-        # snr_db_periodic_i16 — each payload byte is touched once and the
-        # peak per-clip allocation is one period, not the whole clip.
-        # Verdicts/snr are bit-identical (elementwise conversion commutes
-        # with slicing; accumulation order unchanged).
-        #
-        # reference-period cache: only 16 distinct signals exist per sample
-        # rate (i % 16 picks the second tone), and every shorter reference
-        # is a PREFIX of the one-second period (same t = arange(n)/sr
-        # slice, so prefix-of-period is bit-identical to a shorter synth).
-        # Synthesizing two np.sin's per CLIP was the hot loop's dominant
-        # compute — 75% of per-clip time under cProfile (VERDICT r04 #2);
-        # with the cache the synth count is <= 16 x distinct-sample-rates
-        # per worker, ~zero amortized. Keyed (i % 16, sr); float64 upcast
-        # once here (bit-identical to upcasting per row). _SR_CACHE_MAX
-        # caps a forged-header sr from synthesizing an absurd period;
-        # _REF_CACHE_MAX_SAMPLES bounds total cache BYTES — an entry-count
-        # bound would let ~256 near-cap periods pin ~1.5 GB per worker
-        # under adversarial sr diversity (review r05).
-        import pyarrow as pa
+    def task():
+        # reference-period cache, one per task: only 16 distinct signals
+        # exist per sample rate (i % 16 picks the second tone), and every
+        # shorter reference is a PREFIX of the one-second period (same
+        # t = arange(n)/sr slice, so prefix-of-period is bit-identical to a
+        # shorter synth). Synthesizing two np.sin's per CLIP was the hot
+        # loop's dominant compute — 75% of per-clip time under cProfile
+        # (VERDICT r04 #2); with the cache the synth count is <= 16 x
+        # distinct-sample-rates per task, ~zero amortized. Keyed
+        # (i % 16, sr); float64 upcast once here (bit-identical to upcasting
+        # per row). _SR_CACHE_MAX caps a forged-header sr from synthesizing
+        # an absurd period; _REF_CACHE_MAX_SAMPLES bounds total cache BYTES
+        # — an entry-count bound would let ~256 near-cap periods pin
+        # ~1.5 GB per worker under adversarial sr diversity (review r05).
         ref_cache: dict[tuple, np.ndarray] = {}
         cache_samples = 0
-        for rb in batches:
-            n = rb.num_rows
-            names = rb.schema.names
-            col = {name: rb.column(names.index(name)) for name in
-                   ("clip_id", "codec", "bytes", "sr_hz", "dur_ms",
-                    "transcript", "_ref_transcript")}
-            cids = col["clip_id"].to_pylist()
-            codecs = col["codec"].to_pylist()
-            srs = col["sr_hz"].to_pylist()
-            durs = col["dur_ms"].to_pylist()
-            trs = col["transcript"].to_pylist()
-            rtrs = col["_ref_transcript"].to_pylist()
-            bcol = col["bytes"]
-            # combine_chunks-free zero-copy access: RecordBatch columns are
-            # plain Arrays; binary layout = validity + offsets + one data
-            # buffer. Respect the array's slice offset.
-            if n == 0:
-                continue
-            bufs = bcol.buffers()
-            off_dt = np.int64 if pa.types.is_large_binary(bcol.type) \
-                else np.int32
-            offs = np.frombuffer(
-                bufs[1], dtype=off_dt,
-                count=n + 1, offset=bcol.offset * np.dtype(off_dt).itemsize)
-            data_mv = memoryview(bufs[2]) if bufs[2] is not None \
-                else memoryview(b"")
-            null_mask = np.asarray(bcol.is_null())
 
-            ok = np.zeros(n, dtype=bool)
-            snr = np.full(n, -np.inf)
-            terr = np.zeros(n, dtype=bool)
-            errs = [""] * n
-            for idx in range(n):
-                cid, codec = cids[idx], codecs[idx]
-                sr, dur, tr, rtr = srs[idx], durs[idx], trs[idx], rtrs[idx]
-                buf = None if null_mask[idx] \
-                    else data_mv[offs[idx]:offs[idx + 1]]
-                fast = decoders[0].get(codec) is decode_wav_pcm16
-                if fast:
-                    s16, dec_sr, err = _parse_wav_pcm16(buf)
-                    sig_len = None if s16 is None else len(s16)
+        def reference(i: int, sr_i: int, dur_i: int, base_n: int) -> np.ndarray:
+            nonlocal cache_samples
+            if sr_i > _SR_CACHE_MAX:  # forged-header sr: synth only what's compared
+                return synth_reference_signal(
+                    i, sr_i, dur_i, max_samples=base_n,
+                    dtype=np.float32).astype(np.float64)
+            key = (i % 16, sr_i)
+            period = ref_cache.get(key)
+            if period is None:
+                if cache_samples + sr_i > _REF_CACHE_MAX_SAMPLES:
+                    ref_cache.clear()
+                    cache_samples = 0
+                period = ref_cache[key] = synth_reference_signal(
+                    i, sr_i, 1000, max_samples=sr_i,
+                    dtype=np.float32).astype(np.float64)
+                cache_samples += sr_i
+            return period if base_n == sr_i else period[:base_n]
+
+        def row(cid, codec, buf, sr, dur, tr, rtr):
+            # the built-in WAV decoder's int16 VIEW of the payload is
+            # converted to float64 chunk-wise inside snr_db_periodic_i16:
+            # each payload byte is touched once and the peak per-clip
+            # allocation is one period, not the whole clip (r06)
+            fast = decode.fns.get(codec) is decode_wav_pcm16
+            sig, dec_sr, err = _parse_wav_pcm16(buf) if fast \
+                else decode(codec, buf)
+            ok, snr = False, -np.inf
+            if sig is not None:
+                # null metadata must be *reported*, never kill the
+                # validator (ADVICE r01)
+                eff_sr = dec_sr if dec_sr else sr
+                if dur is None or eff_sr is None or not eff_sr:
+                    err = "missing_metadata"
                 else:
-                    sig, dec_sr, err = _decode_with(
-                        decoders, codec, None if buf is None else bytes(buf))
-                    sig_len = None if sig is None else len(sig)
-                errs[idx] = err
-                if sig_len is not None:
-                    # null metadata must be *reported*, never kill the
-                    # validator (ADVICE r01)
-                    eff_sr = dec_sr if dec_sr else sr
-                    if dur is None or eff_sr is None or not eff_sr:
-                        errs[idx] = "missing_metadata"
-                    else:
-                        try:
-                            i = int(str(cid)[5:], 16)
-                        except (ValueError, TypeError):
-                            i = 0
-                        # compare length = min(claimed samples, decoded
-                        # samples) — same contract as the old full-tile
-                        # path (ref was synthesized to the claimed length
-                        # capped at len(sig); snr_db then took the common
-                        # prefix, which is exactly this min)
-                        sr_i, dur_i = int(eff_sr), int(dur)
-                        n_cmp = min(max(int(round(sr_i * dur_i / 1000.0)), 1),
-                                    sig_len)
-                        base_n = min(n_cmp, sr_i)  # one period caps the ref
-                        if sr_i <= _SR_CACHE_MAX:
-                            key = (i % 16, sr_i)
-                            period = ref_cache.get(key)
-                            if period is None:
-                                if cache_samples + sr_i > _REF_CACHE_MAX_SAMPLES:
-                                    ref_cache.clear()
-                                    cache_samples = 0
-                                period = synth_reference_signal(
-                                    i, sr_i, 1000, max_samples=sr_i,
-                                    dtype=np.float32).astype(np.float64)
-                                ref_cache[key] = period
-                                cache_samples += sr_i
-                            one = period if base_n == sr_i \
-                                else period[:base_n]
-                        else:  # forged-header sr: synth only what's compared
-                            one = synth_reference_signal(
-                                i, sr_i, dur_i, max_samples=base_n,
-                                dtype=np.float32).astype(np.float64)
-                        s = snr_db_periodic_i16(one, s16, n_cmp) if fast \
-                            else snr_db_periodic(one, sig[:n_cmp])
-                        snr[idx] = s
-                        ok[idx] = s >= min_snr_db
-                        if check_duration:
-                            expected = int(eff_sr) * int(dur) / 1000.0
-                            if abs(sig_len - expected) > max(
-                                    duration_tolerance * expected, 2.0):
-                                ok[idx] = False
-                                errs[idx] = (f"duration_mismatch: decoded "
-                                             f"{sig_len} samples, claimed "
-                                             f"~{int(expected)}")
-                rtr_null = rtr is None
-                tr_null = tr is None
-                terr[idx] = (not rtr_null) and (not tr_null) and tr == rtr
-                if (rtr_null or tr_null) and not errs[idx]:
-                    errs[idx] = "null_transcript" if tr_null \
-                        else "missing_reference_transcript"
-            yield pa.RecordBatch.from_arrays(
-                [col["clip_id"], pa.array(ok), pa.array(snr),
-                 pa.array(terr), pa.array(errs, type=pa.string())],
-                names=["clip_id", "invariant_ok", "snr_db",
-                       "transcript_ok", "error"])
+                    try:
+                        i = int(str(cid)[5:], 16)
+                    except (ValueError, TypeError):
+                        i = 0
+                    # compare length = min(claimed samples, decoded
+                    # samples): snr_db's common-prefix contract
+                    sr_i, dur_i = int(eff_sr), int(dur)
+                    n_cmp = min(max(int(round(sr_i * dur_i / 1000.0)), 1),
+                                len(sig))
+                    one = reference(i, sr_i, dur_i, min(n_cmp, sr_i))
+                    snr = snr_db_periodic_i16(one, sig, n_cmp) if fast \
+                        else snr_db_periodic(one, sig[:n_cmp])
+                    ok = snr >= min_snr_db
+                    if check_duration:
+                        expected = sr_i * dur_i / 1000.0
+                        if abs(len(sig) - expected) > max(
+                                duration_tolerance * expected, 2.0):
+                            ok = False
+                            err = (f"duration_mismatch: decoded {len(sig)} "
+                                   f"samples, claimed ~{int(expected)}")
+            if (rtr is None or tr is None) and not err:
+                err = "null_transcript" if tr is None \
+                    else "missing_reference_transcript"
+            return [(cid, ok, snr, tr is not None and tr == rtr, err)]
 
-    return base.mapInArrow(run, SNR_SCHEMA)
+        return row
+
+    return map_payload(base, cols, SNR_SCHEMA, task)
 
 
 def audio_violations(df: DataFrame, *, min_snr_db: float = 30.0,

@@ -1,10 +1,10 @@
 """Audio feature extraction / transformation over ``binary`` WAV columns.
 
 The multimodal-pipeline surface for the audio payload: decode ->
-feature-extract -> resample -> frame-sample, each as an Arrow-batched
-``mapInPandas`` stage (input_hint: vectorized pandas UDFs, no per-row
-Python). All DSP is numpy (rFFT, linear-interp resampling) — no external
-audio libraries; compressed codecs stay stubbed in functions/audio.py.
+feature-extract -> resample -> frame-sample, each a per-row numpy function
+behind the shared Arrow batch kernel (``payload.map_payload``). All DSP is
+numpy (rFFT, linear-interp resampling) — no external audio libraries;
+compressed codecs stay stubbed in functions/audio.py.
 
 Scale notes: every stage projects only the columns it needs before the UDF
 (bytes never ship unless decoding), and per-clip outputs are bounded arrays
@@ -13,14 +13,12 @@ Scale notes: every stage projects only the columns it needs before the UDF
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from json_skema_spark.functions.audio import _decode_with, _decoder_snapshot
+from json_skema_spark.functions.audio import CLIP_PAYLOAD, _decoder_snapshot
+from json_skema_spark.functions.payload import map_payload
 
 FEATURES_SCHEMA = ("clip_id string, n_frames int, rms_db array<float>, "
                    "zcr array<float>, spectral_centroid array<float>")
@@ -76,49 +74,35 @@ def extract_features(df: DataFrame, *, frame_ms: int = 25,
                      hop_ms: int = 10) -> DataFrame:
     """Per-clip frame features -> (clip_id, n_frames, rms_db[], zcr[],
     spectral_centroid[]). Undecodable clips yield n_frames=0."""
+    decode = _decoder_snapshot()
 
-    decoders = _decoder_snapshot()
+    def row(cid, codec, buf):
+        sig, sr, _err = decode(codec, buf)
+        # sr<=0 / sr=None guard (review r04/r05c): a third-party decoder
+        # reporting rate 0 or None must degrade to an empty feature row,
+        # not TypeError/ZeroDivisionError the whole task
+        if sig is None or not sr or sr <= 0:
+            return [(cid, 0, [], [], [])]
+        f = clip_features(sig, sr, frame_ms=frame_ms, hop_ms=hop_ms)
+        return [(cid, f["n_frames"], f["rms_db"], f["zcr"],
+                 f["spectral_centroid"])]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for cid, codec, buf in zip(pdf["clip_id"], pdf["codec"], pdf["bytes"]):
-                sig, sr, err = _decode_with(decoders, codec, buf)
-                # sr<=0 / sr=None guard (review r04/r05c): a
-                # third-party decoder reporting rate 0 or None must
-                # degrade to an empty feature row, not TypeError/
-                # ZeroDivisionError the whole task
-                if sig is None or not sr or sr <= 0:
-                    out.append((cid, 0, [], [], []))
-                else:
-                    f = clip_features(sig, sr, frame_ms=frame_ms, hop_ms=hop_ms)
-                    out.append((cid, f["n_frames"], f["rms_db"], f["zcr"],
-                                f["spectral_centroid"]))
-            yield pd.DataFrame(out, columns=["clip_id", "n_frames", "rms_db",
-                                             "zcr", "spectral_centroid"])
-
-    return df.select("clip_id", "codec", "bytes").mapInPandas(run, FEATURES_SCHEMA)
+    return map_payload(df, CLIP_PAYLOAD, FEATURES_SCHEMA, lambda: row)
 
 
 def resample_clips(df: DataFrame, target_sr: int) -> DataFrame:
     """Decode + resample to ``target_sr`` -> raw PCM16 bytes (no container)."""
+    decode = _decoder_snapshot()
 
-    decoders = _decoder_snapshot()
+    def row(cid, codec, buf):
+        sig, sr, _err = decode(codec, buf)
+        if sig is None or not sr or sr <= 0:  # sr guard: see extract_features
+            return [(cid, 0, 0, b"")]
+        r = resample_linear(sig, sr, target_sr)
+        pcm = (np.clip(r, -1, 1) * 32767.0).astype("<i2").tobytes()
+        return [(cid, target_sr, len(r), pcm)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for cid, codec, buf in zip(pdf["clip_id"], pdf["codec"], pdf["bytes"]):
-                sig, sr, err = _decode_with(decoders, codec, buf)
-                if sig is None or not sr or sr <= 0:  # sr guard: see extract_features
-                    out.append((cid, 0, 0, b""))
-                    continue
-                r = resample_linear(sig, sr, target_sr)
-                pcm = (np.clip(r, -1, 1) * 32767.0).astype("<i2").tobytes()
-                out.append((cid, target_sr, len(r), pcm))
-            yield pd.DataFrame(out, columns=["clip_id", "sr_hz", "n_samples", "pcm"])
-
-    return df.select("clip_id", "codec", "bytes").mapInPandas(run, RESAMPLE_SCHEMA)
+    return map_payload(df, CLIP_PAYLOAD, RESAMPLE_SCHEMA, lambda: row)
 
 
 def sample_frames(df: DataFrame, *, every_ms: int = 500,
@@ -126,36 +110,29 @@ def sample_frames(df: DataFrame, *, every_ms: int = 500,
     """Deterministic frame sampling (the audio analogue of video
     frame-sampling): one row per sampled window -> (clip_id, frame_idx,
     start_ms, pcm). Exploded rows are bounded by ``max_frames``."""
+    decode = _decoder_snapshot()
 
-    decoders = _decoder_snapshot()
+    def row(cid, codec, buf):
+        sig, sr, _err = decode(codec, buf)
+        # sr<=0: see extract_features. len==0: a VALID zero-sample clip has
+        # no window to sample — emitting one empty-pcm "frame" would
+        # disagree with extract_features' 0-frame verdict for the same clip
+        # (review r04)
+        if sig is None or not sr or sr <= 0 or len(sig) == 0:
+            return
+        hop = max(int(sr * every_ms / 1000), 1)
+        flen = max(int(sr * frame_ms / 1000), 1)
+        # stop is len-flen+1 so an exactly-aligned final full window is
+        # included (stop of len-flen drops it whenever len-flen is a
+        # positive multiple of hop)
+        for i, start in enumerate(range(0, max(len(sig) - flen + 1, 1), hop)):
+            if i >= max_frames:
+                break
+            chunk = sig[start:start + flen]
+            pcm = (np.clip(chunk, -1, 1) * 32767.0).astype("<i2").tobytes()
+            yield cid, i, int(start * 1000 / sr), pcm
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cid, codec, buf in zip(pdf["clip_id"], pdf["codec"], pdf["bytes"]):
-                sig, sr, err = _decode_with(decoders, codec, buf)
-                # sr<=0: see extract_features. len==0: a VALID zero-sample
-                # clip has no window to sample — emitting one empty-pcm
-                # "frame" would disagree with extract_features' 0-frame
-                # verdict for the same clip (review r04)
-                if sig is None or not sr or sr <= 0 or len(sig) == 0:
-                    continue
-                hop = max(int(sr * every_ms / 1000), 1)
-                flen = max(int(sr * frame_ms / 1000), 1)
-                # stop is len-flen+1 so an exactly-aligned final full
-                # window is included (stop of len-flen drops it whenever
-                # len-flen is a positive multiple of hop)
-                for i, start in enumerate(
-                        range(0, max(len(sig) - flen + 1, 1), hop)):
-                    if i >= max_frames:
-                        break
-                    chunk = sig[start:start + flen]
-                    pcm = (np.clip(chunk, -1, 1) * 32767.0).astype("<i2").tobytes()
-                    rows.append((cid, i, int(start * 1000 / sr), pcm))
-            yield pd.DataFrame(rows, columns=["clip_id", "frame_idx",
-                                              "start_ms", "pcm"])
-
-    return df.select("clip_id", "codec", "bytes").mapInPandas(run, FRAMES_SCHEMA)
+    return map_payload(df, CLIP_PAYLOAD, FRAMES_SCHEMA, lambda: row)
 
 
 QUALITY_SCHEMA = ("clip_id string, decode_ok boolean, peak_dbfs double, "
@@ -167,44 +144,36 @@ def audio_quality_stats(df: DataFrame, *, silence_db: float = -50.0,
     """Per-clip content-quality stats — the audio analogue of
     functions/text.quality_score: peak/RMS level (dBFS), clipping ratio
     (fraction of samples at full scale) and silence ratio (fraction of
-    frames under ``silence_db``). Arrow-batched ``mapInPandas``; all DSP
+    frames under ``silence_db``). One Arrow-batched kernel pass; all DSP
     numpy-vectorized per clip."""
+    decode = _decoder_snapshot()
 
-    decoders = _decoder_snapshot()
+    def row(cid, codec, buf):
+        sig, sr, _err = decode(codec, buf)
+        # sr <= 0 matches the sibling stages' r04 containment guard: a
+        # third-party decoder reporting a NEGATIVE rate must degrade the
+        # row, not compute 1-sample frames (review r05)
+        if sig is None or len(sig) == 0 or not sr or sr <= 0:
+            return [(cid, False, None, None, None, None)]
+        a = np.abs(sig)
+        peak = float(a.max())
+        rms = float(np.sqrt(np.mean(sig * sig)))
+        peak_db = 20.0 * np.log10(max(peak, 1e-10))
+        rms_db = 20.0 * np.log10(max(rms, 1e-10))
+        # PCM16 full scale after /32767 normalization is ~1.0
+        clipping = float(np.mean(a >= 32766.0 / 32767.0))
+        flen = max(int(sr * frame_ms / 1000), 1)
+        hop = max(int(sr * hop_ms / 1000), 1)
+        frames = frame_signal(sig, flen, hop)
+        if frames.size == 0:
+            silence = 1.0
+        else:
+            frms = np.sqrt(np.mean(frames * frames, axis=1))
+            frms_db = 20.0 * np.log10(np.maximum(frms, 1e-10))
+            silence = float(np.mean(frms_db < silence_db))
+        return [(cid, True, peak_db, rms_db, clipping, silence)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cid, codec, buf in zip(pdf["clip_id"], pdf["codec"], pdf["bytes"]):
-                sig, sr, err = _decode_with(decoders, codec, buf)
-                # sr <= 0 matches the sibling UDFs' r04 containment guard:
-                # a third-party decoder reporting a NEGATIVE rate must
-                # degrade the row, not compute 1-sample frames (review r05)
-                if sig is None or len(sig) == 0 or not sr or sr <= 0:
-                    rows.append((cid, False, None, None, None, None))
-                    continue
-                a = np.abs(sig)
-                peak = float(a.max())
-                rms = float(np.sqrt(np.mean(sig * sig)))
-                peak_db = 20.0 * np.log10(max(peak, 1e-10))
-                rms_db = 20.0 * np.log10(max(rms, 1e-10))
-                # PCM16 full scale after /32767 normalization is ~1.0
-                clipping = float(np.mean(a >= 32766.0 / 32767.0))
-                flen = max(int(sr * frame_ms / 1000), 1)
-                hop = max(int(sr * hop_ms / 1000), 1)
-                frames = frame_signal(sig, flen, hop)
-                if frames.size == 0:
-                    silence = 1.0
-                else:
-                    frms = np.sqrt(np.mean(frames * frames, axis=1))
-                    frms_db = 20.0 * np.log10(np.maximum(frms, 1e-10))
-                    silence = float(np.mean(frms_db < silence_db))
-                rows.append((cid, True, peak_db, rms_db, clipping, silence))
-            yield pd.DataFrame(rows, columns=["clip_id", "decode_ok", "peak_dbfs",
-                                              "rms_dbfs", "clipping_ratio",
-                                              "silence_ratio"])
-
-    return df.select("clip_id", "codec", "bytes").mapInPandas(run, QUALITY_SCHEMA)
+    return map_payload(df, CLIP_PAYLOAD, QUALITY_SCHEMA, lambda: row)
 
 
 def audio_quality_violations(df: DataFrame, *, max_clipping_ratio: float = 0.001,
@@ -241,38 +210,29 @@ def duration_consistency_violations(df: DataFrame, *,
     metadata still claims full length). Synthetic fixture caveat: generated
     clips cap audio at 2000 ms (FIXTURES.md), so pass ``max_claim_ms`` rows
     already filtered, or use on real tables where bytes cover dur_ms."""
-    decoded = df.select("clip_id", "codec", "bytes", "sr_hz", "dur_ms")
+    decode = _decoder_snapshot()
 
-    decoders = _decoder_snapshot()
+    def row(cid, codec, buf, sr, dur):
+        sig, dec_sr, _err = decode(codec, buf)
+        # decoder-reported rate, claimed sr_hz as the fallback (same
+        # convention as pcm_invariant_check). sr <= 0 containment like the
+        # sibling stages (r04/r05c): a decoder-reported or claimed NEGATIVE
+        # rate would flow into the duration math and emit bogus
+        # negative-duration violations for every such clip
+        eff_sr = dec_sr if dec_sr and dec_sr > 0 else (
+            None if sr is None else int(sr))
+        if sig is None or not eff_sr or eff_sr <= 0 or dur is None:
+            # a missing claim is required's problem, not a
+            # duration-consistency violation (ADVICE r01)
+            return []
+        actual_ms = int(len(sig) * 1000 / eff_sr)
+        if abs(actual_ms - int(dur)) > tolerance_ms:
+            return [(cid, int(dur), actual_ms)]
+        return []
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"clip_id": [], "claimed_ms": [], "actual_ms": []}
-            for cid, codec, buf, sr, dur in zip(
-                    pdf["clip_id"], pdf["codec"], pdf["bytes"],
-                    pdf["sr_hz"], pdf["dur_ms"]):
-                sig, dec_sr, err = _decode_with(decoders, codec, buf)
-                # decoder-reported rate, claimed sr_hz as the fallback
-                # (same convention as pcm_invariant_check)
-                # sr <= 0 containment like the sibling UDFs (r04/r05c): a
-                # decoder-reported or claimed NEGATIVE rate would flow into
-                # the duration math and emit bogus negative-duration
-                # violations for every such clip
-                eff_sr = dec_sr if dec_sr and dec_sr > 0 else (
-                    None if pd.isna(sr) else int(sr))
-                if sig is None or not eff_sr or eff_sr <= 0 or pd.isna(dur):
-                    # null dur_ms arrives as NaN; int(NaN) raises and would
-                    # abort the job — a missing claim is required's problem,
-                    # not a duration-consistency violation (ADVICE r01)
-                    continue
-                actual_ms = int(len(sig) * 1000 / eff_sr)
-                if abs(actual_ms - int(dur)) > tolerance_ms:
-                    out["clip_id"].append(cid)
-                    out["claimed_ms"].append(int(dur))
-                    out["actual_ms"].append(actual_ms)
-            yield pd.DataFrame(out)
-
-    mism = decoded.mapInPandas(run, "clip_id string, claimed_ms int, actual_ms int")
+    mism = map_payload(df, [*CLIP_PAYLOAD, "sr_hz", "dur_ms"],
+                       "clip_id string, claimed_ms int, actual_ms int",
+                       lambda: row)
     return mism.select(
         F.col("clip_id").alias("row_key"),
         F.lit("const").alias("keyword"),

@@ -18,20 +18,21 @@ A REAL trivial codec keeps the math honest end to end:
   ``codec_not_supported:<codec>`` verdicts (never a crash); a real
   deployment registers Pillow/PyAV decoders with the same signatures.
 
-Execution model mirrors audio.py: ``mapInPandas`` over Arrow record
-batches, numpy per batch, only the needed columns projected into the UDF.
+Execution model mirrors audio.py: every stage is a per-row numpy function
+behind the shared Arrow batch kernel (``payload.map_payload``), with only
+the needed columns projected into it and the payload read as a zero-copy
+view.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from json_skema_spark.functions.payload import Decoders, map_payload
 
 IMAGE_DECODE_SCHEMA = ("image_id string, decode_ok boolean, error string, "
                        "width int, height int, channels int")
@@ -59,10 +60,9 @@ def decode_rgb8raw(buf: Any) -> tuple[np.ndarray | None, str]:
         w, h, c = struct.unpack_from("<iii", buf, 0)
         if w <= 0 or h <= 0 or c not in (1, 3, 4):
             return None, "bad_rgb8raw_header"
-        body = bytes(buf[12:])
-        if len(body) != w * h * c:
+        if len(buf) - 12 != w * h * c:
             return None, "truncated_rgb8raw"
-        return np.frombuffer(body, np.uint8).reshape(h, w, c), ""
+        return np.frombuffer(buf, np.uint8, offset=12).reshape(h, w, c), ""
     except Exception as exc:  # malformed payload is a verdict, not a crash
         return None, f"decode_error:{type(exc).__name__}"
 
@@ -95,7 +95,10 @@ _KNOWN_IMAGE_CODECS = {"rgb8raw", "jpeg", "png", "webp"}
 
 
 def register_image_decoder(codec: str, fn: Any) -> None:
-    """``fn(buf) -> ((h,w,c) uint8 array | None, error)``."""
+    """``fn(buf) -> ((h,w,c) uint8 array | None, error)``. ``buf`` is the
+    payload as ``bytes`` (``None`` for a null payload); exceptions it leaks
+    are contained per row as ``decode_error:<type>`` verdicts. Register
+    before building the plan: stages snapshot the registry."""
     _IMAGE_DECODERS[codec] = fn
     _KNOWN_IMAGE_CODECS.add(codec)
 
@@ -136,127 +139,87 @@ def register_optional_image_decoders() -> list[str]:
     return registered
 
 
-def _image_decoder_snapshot() -> tuple[dict, frozenset]:
-    """(decoders, known) value-copy for UDF closures — the known set must
-    ship with the snapshot or executors report 'unknown_codec' where the
-    driver says 'codec_not_supported' (see audio._decoder_snapshot)."""
-    return dict(_IMAGE_DECODERS), frozenset(_KNOWN_IMAGE_CODECS)
+def _image_decoder_snapshot() -> Decoders:
+    """The image registry's dispatch, ``decode(codec, payload) -> (img,
+    error)`` (see ``payload.Decoders``); ``decode_rgb8raw`` reads the
+    payload view."""
+    return Decoders(_IMAGE_DECODERS, _KNOWN_IMAGE_CODECS, (None,),
+                    native=(decode_rgb8raw,))
 
 
-def _decode_image(decoders, codec: Any, buf: Any):
-    # same dispatch contract as audio._decode_with (kept separate only
-    # because the return shapes differ: (img, err) vs (sig, sr, err))
-    if isinstance(decoders, tuple):
-        decoders, known = decoders
-    else:
-        known = _KNOWN_IMAGE_CODECS
-    fn = decoders.get(codec)
-    if fn is not None:
-        try:
-            img, err = fn(buf)
-        except Exception as exc:
-            return None, f"decode_error:{type(exc).__name__}"
-        if img is not None:
-            # validate the shape INSIDE the containment boundary: a
-            # third-party decoder returning a 2-D grayscale array (e.g.
-            # PIL.Image.open without .convert('RGB')) previously raised
-            # IndexError at img.shape[2] in the mapInPandas loop — task
-            # death, not a per-row verdict (review r05c)
-            arr = np.asarray(img)
-            if arr.ndim != 3 or arr.shape[2] < 1:
-                return None, f"decode_error:bad_shape:{'x'.join(map(str, arr.shape))}"
-            return arr, err
-        return img, err
-    if codec in known:
-        return None, f"codec_not_supported:{codec}"
-    return None, f"unknown_codec:{codec}"
+def _checked_image(decode: Decoders, codec: Any, buf: Any):
+    img, err = decode(codec, buf)
+    if img is None:
+        return None, err
+    # a third-party decoder returning a 2-D grayscale array (e.g.
+    # PIL.Image.open without .convert('RGB')) would IndexError at
+    # img.shape[2] in the stage — task death, not a per-row verdict
+    # (review r05c)
+    arr = np.asarray(img)
+    if arr.ndim != 3 or arr.shape[2] < 1:
+        return None, f"decode_error:bad_shape:{'x'.join(map(str, arr.shape))}"
+    return arr, err
 
 
 # -- operators ----------------------------------------------------------------
 
+IMAGE_PAYLOAD = ("image_id", "codec", "bytes")
+
+
 def image_decode_check(df: DataFrame) -> DataFrame:
     """Per-row decode-ability -> (image_id, decode_ok, error, width, height,
     channels). Input needs (image_id, codec, bytes)."""
-    decoders = _image_decoder_snapshot()
+    decode = _image_decoder_snapshot()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ok, err, ws, hs, cs = [], [], [], [], []
-            for codec, buf in zip(pdf["codec"], pdf["bytes"]):
-                img, e = _decode_image(decoders, codec, buf)
-                ok.append(img is not None)
-                err.append(e)
-                ws.append(0 if img is None else img.shape[1])
-                hs.append(0 if img is None else img.shape[0])
-                cs.append(0 if img is None else img.shape[2])
-            yield pd.DataFrame({"image_id": pdf["image_id"], "decode_ok": ok,
-                                "error": err, "width": ws, "height": hs,
-                                "channels": cs})
+    def row(iid, codec, buf):
+        img, err = _checked_image(decode, codec, buf)
+        if img is None:
+            return [(iid, False, err, 0, 0, 0)]
+        h, w, c = img.shape
+        return [(iid, True, err, w, h, c)]
 
-    return df.select("image_id", "codec", "bytes").mapInPandas(
-        run, IMAGE_DECODE_SCHEMA)
+    return map_payload(df, IMAGE_PAYLOAD, IMAGE_DECODE_SCHEMA, lambda: row)
 
 
 def resize_images(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
     """Nearest-neighbor resize -> re-encoded rgb8raw bytes (exact numpy
     index math — deterministic across runs/partitionings)."""
-    decoders = _image_decoder_snapshot()
+    decode = _image_decoder_snapshot()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_bytes, errs = [], []
-            for codec, buf in zip(pdf["codec"], pdf["bytes"]):
-                img, e = _decode_image(decoders, codec, buf)
-                if img is None:
-                    out_bytes.append(None)
-                    errs.append(e)
-                    continue
-                h, w, _c = img.shape
-                ys = (np.arange(target_h) * h // target_h)
-                xs = (np.arange(target_w) * w // target_w)
-                out_bytes.append(encode_rgb8raw(img[ys][:, xs]))
-                errs.append("")
-            yield pd.DataFrame({
-                "image_id": pdf["image_id"], "bytes": out_bytes,
-                "width": target_w, "height": target_h,
-                "codec": "rgb8raw", "error": errs})
+    def row(iid, codec, buf):
+        img, err = _checked_image(decode, codec, buf)
+        if img is None:
+            return [(iid, None, target_w, target_h, "rgb8raw", err)]
+        h, w, _c = img.shape
+        ys = (np.arange(target_h) * h // target_h)
+        xs = (np.arange(target_w) * w // target_w)
+        return [(iid, encode_rgb8raw(img[ys][:, xs]), target_w, target_h,
+                 "rgb8raw", "")]
 
-    return df.select("image_id", "codec", "bytes").mapInPandas(
-        run, RESIZE_SCHEMA)
+    return map_payload(df, IMAGE_PAYLOAD, RESIZE_SCHEMA, lambda: row)
 
 
 def image_stats(df: DataFrame) -> DataFrame:
     """Per-channel means + gray stddev — the feature-extraction shape."""
-    decoders = _image_decoder_snapshot()
+    decode = _image_decoder_snapshot()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for iid, codec, buf in zip(pdf["image_id"], pdf["codec"],
-                                       pdf["bytes"]):
-                img, e = _decode_image(decoders, codec, buf)
-                if img is None:
-                    rows.append((iid, False, e, None, None, None, None))
-                    continue
-                # color stats over the first 3 channels only: an alpha
-                # plane would contaminate the gray stddev (identical RGB
-                # content scoring differently as RGB vs RGBA), and a
-                # missing channel reports None, not a silently-duplicated
-                # neighbor
-                f = img[..., :3].astype(np.float64)
-                means = f.mean(axis=(0, 1))
-                gray = f.mean(axis=2)
-                rows.append((
-                    iid, True, "", float(means[0]),
-                    float(means[1]) if len(means) > 1 else None,
-                    float(means[2]) if len(means) > 2 else None,
-                    float(gray.std())))
-            yield pd.DataFrame(rows, columns=[
-                "image_id", "decode_ok", "error", "mean_r", "mean_g",
-                "mean_b", "std_gray"])
+    def row(iid, codec, buf):
+        img, err = _checked_image(decode, codec, buf)
+        if img is None:
+            return [(iid, False, err, None, None, None, None)]
+        # color stats over the first 3 channels only: an alpha plane would
+        # contaminate the gray stddev (identical RGB content scoring
+        # differently as RGB vs RGBA), and a missing channel reports None,
+        # not a silently-duplicated neighbor
+        f = img[..., :3].astype(np.float64)
+        means = f.mean(axis=(0, 1))
+        gray = f.mean(axis=2)
+        return [(iid, True, "", float(means[0]),
+                 float(means[1]) if len(means) > 1 else None,
+                 float(means[2]) if len(means) > 2 else None,
+                 float(gray.std()))]
 
-    return df.select("image_id", "codec", "bytes").mapInPandas(
-        run, IMAGE_STATS_SCHEMA)
+    return map_payload(df, IMAGE_PAYLOAD, IMAGE_STATS_SCHEMA, lambda: row)
 
 
 def sample_video_frames(df: DataFrame, *, every_ms: int = 1000,
@@ -266,31 +229,21 @@ def sample_video_frames(df: DataFrame, *, every_ms: int = 1000,
     ``rawvid`` decodes here (real slicing), other codecs yield zero rows —
     pair with ``decode_rawvid_header`` checks to report them."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for vid, codec, buf in zip(pdf["video_id"], pdf["codec"],
-                                       pdf["bytes"]):
-                if codec != "rawvid":
-                    continue
-                hdr, e = decode_rawvid_header(buf)
-                if hdr is None:
-                    continue
-                w, h, fps, n = hdr
-                step = max(int(round(fps * every_ms / 1000.0)), 1)
-                fsize = w * h * 3
-                for k, fi in enumerate(range(0, n, step)):
-                    if k >= max_frames:
-                        break
-                    start = 16 + fi * fsize
-                    frame = np.frombuffer(
-                        bytes(buf[start:start + fsize]), np.uint8
-                    ).reshape(h, w, 3)
-                    rows.append((vid, fi, 1000.0 * fi / fps,
-                                 encode_rgb8raw(frame), w, h))
-            yield pd.DataFrame(rows, columns=[
-                "video_id", "frame_index", "ts_ms", "bytes", "width",
-                "height"])
+    def row(vid, codec, buf):
+        if codec != "rawvid":
+            return
+        hdr, _err = decode_rawvid_header(buf)
+        if hdr is None:
+            return
+        w, h, fps, n = hdr
+        step = max(int(round(fps * every_ms / 1000.0)), 1)
+        fsize = w * h * 3
+        for k, fi in enumerate(range(0, n, step)):
+            if k >= max_frames:
+                break
+            frame = np.frombuffer(buf, np.uint8, count=fsize,
+                                  offset=16 + fi * fsize).reshape(h, w, 3)
+            yield vid, fi, 1000.0 * fi / fps, encode_rgb8raw(frame), w, h
 
-    return df.select("video_id", "codec", "bytes").mapInPandas(
-        run, FRAME_SCHEMA)
+    return map_payload(df, ("video_id", "codec", "bytes"), FRAME_SCHEMA,
+                       lambda: row)

@@ -1,12 +1,14 @@
 """Audio feature extraction / resample / frame-sample / duration checks."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from json_skema_spark.functions import audio
 from json_skema_spark.functions.audio_features import (
-    clip_features, duration_consistency_violations, extract_features,
-    frame_signal, resample_clips, resample_linear, sample_frames)
+    audio_quality_stats, clip_features, duration_consistency_violations,
+    extract_features, frame_signal, resample_clips, resample_linear,
+    sample_frames)
 from json_skema_spark.sources import clips as clips_src
 
 
@@ -120,3 +122,90 @@ def test_sample_frames_includes_aligned_final_window(spark):
         "clip_id string, codec string, bytes binary")
     rows = sample_frames(df, every_ms=500, frame_ms=100).collect()
     assert sorted(r.start_ms for r in rows) == [0, 500]
+
+
+def test_clip_features_one_sample_frame_no_nan():
+    f = clip_features(np.asarray([0.5], dtype=np.float64), sr=40)
+    # 25ms at sr=40 -> frame_len 1: zcr must be 0.0, never NaN
+    assert f["n_frames"] == 1 and f["zcr"] == [0.0]
+    assert not any(np.isnan(f["rms_db"]))
+
+
+def test_frame_signal_is_a_view_and_matches_copy_semantics():
+    sig = np.arange(100, dtype=np.float64)
+    frames = frame_signal(sig, 25, 10)
+    assert frames.shape == (8, 25)
+    # identical frame content to the index-materialized formulation
+    idx = np.arange(25)[None, :] + 10 * np.arange(8)[:, None]
+    assert np.array_equal(frames, sig[idx])
+    assert frames.base is not None  # a view, not a copy
+
+
+# Registered decoders reporting a bad sample rate, one codec each: 0
+# (review r04), None (review r05c), -1 (review r05) and -48000 beside a
+# valid claimed 48000 (review r05c). Each returns 4800 samples, which is
+# exactly the claimed 100 ms at the claimed rate.
+_BAD_RATES = {"srzero": 0, "nonesr": None, "negsr": -1, "negsr48k": -48000}
+
+
+def _features_empty(rows):
+    assert sorted(r.clip_id for r in rows) == sorted(_BAD_RATES)
+    assert all(r.n_frames == 0 for r in rows)
+
+
+def _resampled_empty(rows):
+    assert sorted(r.clip_id for r in rows) == sorted(_BAD_RATES)
+    assert all(r.n_samples == 0 for r in rows)
+
+
+def _quality_degraded(rows):
+    assert sorted(r.clip_id for r in rows) == sorted(_BAD_RATES)
+    assert all(r.decode_ok is False for r in rows)
+    assert all(r.silence_ratio is None for r in rows)
+
+
+def _decoder_rate_reported(rows):
+    assert {r.clip_id: r.sr_hz_decoded for r in rows} == _BAD_RATES
+    assert all(r.decode_ok and r.n_samples == 4800 for r in rows)
+
+
+def _invariant_fails(rows):
+    assert sorted(r.clip_id for r in rows) == sorted(_BAD_RATES)
+    assert not any(r.invariant_ok for r in rows)
+
+
+def _no_rows(rows):
+    # sample_frames: no window at an unusable rate; duration: a bad decoder
+    # rate falls back to the claimed 48000, so 4800 samples = 100 ms is
+    # consistent, never a bogus negative-duration violation
+    assert rows == []
+
+
+@pytest.mark.parametrize("stage, check", [
+    (audio.decode_check, _decoder_rate_reported),
+    (audio.pcm_invariant_check, _invariant_fails),
+    (extract_features, _features_empty),
+    (lambda df: resample_clips(df, target_sr=8000), _resampled_empty),
+    (sample_frames, _no_rows),
+    (audio_quality_stats, _quality_degraded),
+    (duration_consistency_violations, _no_rows),
+], ids=["decode_check", "pcm_invariant_check", "extract_features",
+        "resample_clips", "sample_frames", "audio_quality_stats",
+        "duration_consistency_violations"])
+def test_audio_stages_contain_bad_sample_rates(spark, stage, check):
+    """A third-party decoder's bad sample rate must degrade its row, never
+    ZeroDivisionError/TypeError the task (the registry contract)."""
+    for codec, sr in _BAD_RATES.items():
+        audio.register_decoder(
+            codec, lambda buf, sr=sr: (np.zeros(4800), sr, ""))
+    try:
+        df = spark.createDataFrame(
+            [(codec, codec, bytearray(b"xx"), 48000, 100, "t")
+             for codec in _BAD_RATES],
+            "clip_id string, codec string, bytes binary, sr_hz int, "
+            "dur_ms int, transcript string")
+        check(stage(df).collect())
+    finally:
+        for codec in _BAD_RATES:
+            audio.unregister_decoder(codec)
+            audio._KNOWN_CODECS.discard(codec)

@@ -117,3 +117,19 @@ def test_image_stats_alpha_not_in_gray(spark):
     got = {r.image_id: r for r in image_stats(df).collect()}
     assert got["rgb"].std_gray == got["rgba"].std_gray
     assert got["rgb"].mean_r == got["rgba"].mean_r
+
+
+def test_image_decode_contains_2d_decoder_output(spark):
+    """A registered decoder returning a 2-D grayscale array must degrade to
+    a per-row verdict, not IndexError the task (review r05c)."""
+    media.register_image_decoder(
+        "gray2d", lambda buf: (np.zeros((4, 5), np.uint8), ""))
+    try:
+        df = spark.createDataFrame(
+            [("i1", "gray2d", bytearray(b"xx"))],
+            "image_id string, codec string, bytes binary")
+        r = media.image_decode_check(df).collect()[0]
+    finally:
+        media.unregister_image_decoder("gray2d")
+    assert not r["decode_ok"]
+    assert r["error"] == "decode_error:bad_shape:4x5"

@@ -20,7 +20,7 @@ def test_optional_audio_decoders_absent_is_graceful():
         pytest.skip("soundfile present: absence path not reachable")
     assert audio_fn.register_optional_decoders() == []
     # flac still deterministically rejects, never crashes
-    sig, sr, err = audio_fn._decode_dispatch("flac", b"fLaC....")
+    sig, sr, err = audio_fn._decoder_snapshot()("flac", b"fLaC....")
     assert sig is None and err == "codec_not_supported:flac"
 
 
@@ -49,7 +49,7 @@ def test_real_flac_decoder_roundtrip(spark):
         buf = io.BytesIO()
         sf.write(buf, sig, sr, format="FLAC")
         flac_bytes = buf.getvalue()
-        out, got_sr, err = audio_fn._decode_dispatch("flac", flac_bytes)
+        out, got_sr, err = audio_fn._decoder_snapshot()("flac", flac_bytes)
         assert err == "" and got_sr == sr
         assert np.allclose(out, sig, atol=1e-3)
 
@@ -100,10 +100,10 @@ def test_decoder_snapshot_carries_known_set():
         snap = audio_fn._decoder_snapshot()
         # simulate the executor: dispatch with the snapshot only — the
         # known set must ride the snapshot, not the module global
-        _sig, _sr, err = audio_fn._decode_with(snap, "mp3", b"x")
+        _sig, _sr, err = snap("mp3", b"x")
         assert err == "codec_not_supported:mp3"
         # genuinely unknown codec still says so
-        _sig, _sr, err2 = audio_fn._decode_with(snap, "xyz", b"x")
+        _sig, _sr, err2 = snap("xyz", b"x")
         assert err2 == "unknown_codec:xyz"
     finally:
         audio_fn.unregister_decoder("mp3")
@@ -113,7 +113,7 @@ def test_decoder_snapshot_carries_known_set():
     try:
         media_fn.unregister_image_decoder("tiff")
         msnap = media_fn._image_decoder_snapshot()
-        _img, err = media_fn._decode_image(msnap, "tiff", b"x")
+        _img, err = msnap("tiff", b"x")
         assert err == "codec_not_supported:tiff"
     finally:
         media_fn.unregister_image_decoder("tiff")

@@ -293,25 +293,3 @@ def test_merge_profiles_scale0_decimal_exact_past_2_53(spark):
               merge_profiles(mergeable_profile(df, ["d"])).collect()}
     assert merged["d"]["min_value"] == exact["d"]["min_value"] == str(big)
     assert merged["d"]["max_value"] == exact["d"]["max_value"] == str(big + 1)
-
-
-def test_audio_quality_stats_negative_sr_degrades(spark):
-    """A registered decoder reporting sr=-1 must degrade the row like the
-    sibling UDFs (r04 containment guard), not compute 1-sample frames."""
-    import numpy as np
-
-    from json_skema_spark.functions import audio
-    from json_skema_spark.functions.audio_features import audio_quality_stats
-
-    def bad_decoder(buf):
-        return np.zeros(100), -1, ""
-
-    audio.register_decoder("negsr", bad_decoder)
-    try:
-        df = spark.createDataFrame([("c1", "negsr", bytearray(b"x"))],
-                                   "clip_id string, codec string, bytes binary")
-        rows = audio_quality_stats(df).collect()
-        assert rows[0]["decode_ok"] is False
-        assert rows[0]["silence_ratio"] is None
-    finally:
-        audio.unregister_decoder("negsr")
